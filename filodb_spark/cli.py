@@ -216,8 +216,8 @@ def _open_store(spark, store: str, partkey: str | None = None,
     if store.startswith("events:"):
         from filodb_spark.tsdf import events_labels_ts
         return TsStore(events_labels_ts(spark, store.split(":", 1)[1]), **kw)
-    df = spark.read.parquet(store)
-    return TsStore(df.select("labels", "ts", "value"), **kw)
+    from filodb_spark.sources.table import series_frame
+    return TsStore(series_frame(spark.read.parquet(store)), **kw)
 
 
 def _add_ds_args(p):

@@ -12,6 +12,7 @@ long scan cannot head-of-line-block cheap queries.
 
 from __future__ import annotations
 
+import itertools
 import json
 import threading
 import traceback
@@ -23,23 +24,47 @@ from filodb_spark import metadata as md
 from filodb_spark.promql.compiler import QueryLimitException
 
 
+# FAIR scheduler pools are created on first use and never removed by
+# Spark, so a unique pool per request grows the scheduler's pool list
+# without bound. Pool names are recycled through a free-list instead:
+# the live pool count equals the peak number of concurrent requests.
+_pool_lock = threading.Lock()
+_free_pools: list[str] = []
+_pool_seq = itertools.count()
+
+
+def _acquire_pool() -> str:
+    with _pool_lock:
+        return _free_pools.pop() if _free_pools else \
+            f"query-pool-{next(_pool_seq)}"
+
+
+def _release_pool(name: str) -> None:
+    with _pool_lock:
+        _free_pools.append(name)
+
+
 def run_with_timeout(spark, fn, timeout_s: float | None):
     """Per-query isolation + optional timeout (PerQueryLimits /
     ExecPlan.scala:214-226 enforcement analog). EVERY request runs
-    under its own Spark job group and scheduler pool — with the
-    session's FAIR scheduler mode (session.get_spark), concurrent
-    requests round-robin the executor instead of queueing FIFO behind
-    a long scan, the reference's per-query scheduler isolation
-    (FiloSchedulers / QueryActor). With a timeout, fn runs in a worker
-    thread (setJobGroup/pool are thread-local, so concurrent requests
-    stay isolated) and the group's jobs are cancelled on expiry."""
+    under its own Spark job group and a scheduler pool no other
+    in-flight request holds — with the session's FAIR scheduler mode
+    (session.get_spark), concurrent requests round-robin the executor
+    instead of queueing FIFO behind a long scan, the reference's
+    per-query scheduler isolation (FiloSchedulers / QueryActor). The
+    job group is unique per request (cancellation targets it); the pool
+    returns to the free-list when fn finishes. With a timeout, fn runs
+    in a worker thread (setJobGroup/pool are thread-local, so
+    concurrent requests stay isolated) and the group's jobs are
+    cancelled on expiry."""
     import uuid
     group = f"query-{uuid.uuid4().hex[:12]}"
 
     def isolated():
         sc = spark.sparkContext
+        pool = _acquire_pool()
         sc.setJobGroup(group, "http query", interruptOnCancel=True)
-        sc.setLocalProperty("spark.scheduler.pool", group)
+        sc.setLocalProperty("spark.scheduler.pool", pool)
         try:
             return fn()
         finally:
@@ -47,6 +72,7 @@ def run_with_timeout(spark, fn, timeout_s: float | None):
             # pool into a reused thread (the job group is overwritten
             # by the next setJobGroup on the same thread)
             sc.setLocalProperty("spark.scheduler.pool", None)
+            _release_pool(pool)
 
     if not timeout_s:
         return isolated()

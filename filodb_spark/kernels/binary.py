@@ -151,7 +151,8 @@ def vector_binary_op(lhs: DataFrame, rhs: DataFrame, op: str,
                      bool_modifier: bool = False,
                      labels_col: str = "labels", t_col: str = "t",
                      value_col: str = "value",
-                     check_cardinality: bool = True) -> DataFrame:
+                     check_cardinality: bool | tuple[bool, bool] = True
+                     ) -> DataFrame:
     """Vector-vector binary operation with PromQL label matching.
 
     Inputs/outputs use the universal layout (labels map, t, value).
@@ -162,7 +163,11 @@ def vector_binary_op(lhs: DataFrame, rhs: DataFrame, op: str,
     (BinaryJoinExec.scala:127-148) LAZILY: the duplicate-key frame is
     empty for legal queries, so the only added cost is one aggregation
     over the "one" side inside the query's own job — no separate driver
-    action. A violation raises during execution via assert_true.
+    action. A violation raises during execution via assert_true. Pass
+    an (lhs, rhs) pair to check the sides separately: a side whose join
+    keys are already proven unique (the compiler's
+    _unique_join_keys) skips its aggregation, and with it a second
+    evaluation of its whole subtree.
     """
     if cardinality not in ("one-to-one", "many-to-one", "one-to-many"):
         raise ValueError(f"unsupported cardinality: {cardinality}")
@@ -172,18 +177,24 @@ def vector_binary_op(lhs: DataFrame, rhs: DataFrame, op: str,
     r = jk(rhs).select(F.col(labels_col).alias("_rlab"), "_jk",
                        F.col(t_col).alias("t"), F.col(value_col).alias("_rv"))
 
+    check_l, check_r = (check_cardinality, check_cardinality) \
+        if isinstance(check_cardinality, bool) else check_cardinality
+
+    def _dups(side: DataFrame, lab: str) -> DataFrame:
+        return (side.groupBy("_jk")
+                    .agg(F.count_distinct(canonical_labels(F.col(lab)))
+                          .alias("_n"))
+                    .where(F.col("_n") > 1).select("_jk"))
+    # the "one" sides: rhs for one-to-one/group_left, lhs for
+    # one-to-one/group_right
+    dups = []
+    if check_r and cardinality != "one-to-many":
+        dups.append(_dups(r, "_rlab"))
+    if check_l and cardinality != "many-to-one":
+        dups.append(_dups(l, "_llab"))
     err_frame = None
-    if check_cardinality:
-        def _dups(side: DataFrame, lab: str) -> DataFrame:
-            return (side.groupBy("_jk")
-                        .agg(F.count_distinct(canonical_labels(F.col(lab)))
-                              .alias("_n"))
-                        .where(F.col("_n") > 1).select("_jk"))
-        one, lab = (r, "_rlab") if cardinality in ("one-to-one", "many-to-one") \
-            else (l, "_llab")
-        dup = _dups(one, lab)
-        if cardinality == "one-to-one":
-            dup = dup.unionByName(_dups(l, "_llab"))
+    if dups:
+        dup = dups[0] if len(dups) == 1 else dups[0].unionByName(dups[1])
         err_frame = dup.limit(1).select(
             F.lit(None).cast("map<string,string>").alias(labels_col),
             F.lit(0).cast("long").alias("t"),

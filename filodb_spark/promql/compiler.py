@@ -19,6 +19,7 @@ per distinct labels value (RangeVector.scala:126-144).
 from __future__ import annotations
 
 import threading
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -31,6 +32,8 @@ from filodb_spark.kernels.instant_fns import INSTANT_FUNCTIONS, instant_fn_expr
 from filodb_spark.kernels.range_fns import range_function
 from filodb_spark.promql import ast as A
 from filodb_spark.promql.parser import parse
+from filodb_spark.sources.table import (KEY_COLUMNS, SHARD_KEY_LABELS,
+                                        series_frame)
 
 METRIC = "__name__"
 
@@ -141,17 +144,18 @@ PARAM_RANGE_FNS = {"quantile_over_time": "quantile_over_time",
 
 
 def _apply_label_matchers(df: DataFrame, matchers,
-                          extra: Column | None = None) -> DataFrame:
+                          extra: Sequence[Column] = ()) -> DataFrame:
     """Apply PromQL label matchers to any frame with a `labels` map
     column — shared by the sample scan (TsStore.select) and the
     part-key table scan (TsStore.select_partkeys), mirroring the
     reference's single ColumnFilter path feeding both data and
     metadata queries (PartKeyIndex.scala:652-674 anchors regexes).
-    `extra` is an additional conjunctive predicate (e.g. the metric
-    equality) folded into the SAME where — one eager plan analysis for
-    the whole selector instead of one per filter (r13 opt)."""
+    `extra` holds additional conjunctive predicates (e.g. the metric
+    equality and _key_twins) folded into the SAME where — one eager
+    plan analysis for the whole selector instead of one per filter
+    (r13 opt)."""
     labels = F.col("labels")
-    conds = [] if extra is None else [extra]
+    conds = list(extra)
     for m in matchers:
         lv = labels[m.name]
         if m.op == "=":
@@ -176,6 +180,33 @@ def _apply_label_matchers(df: DataFrame, matchers,
     return df.where(cond)
 
 
+def _key_twins(df: DataFrame, metric: str | None, matchers) -> list[Column]:
+    """Pushable twins of the metric and shard-key equality filters, on
+    whichever physical key columns (sources.table.KEY_COLUMNS) the frame
+    carries: partition-directory pruning, parquet row-group skipping and
+    in-memory cached-batch skipping, none of which a filter on the
+    `labels` map gets. Each twin is implied by the map filter it twins
+    (TsStore docstring invariant), so adding it never changes a result;
+    `__none__`/"" shard-key values stay map-only, as the writer maps
+    absent labels to `__none__`. [] for frames without key columns."""
+    cols = set(df.columns)
+    conds = []
+    if metric and "_metric" in cols:
+        conds.append(F.col("_metric") == metric)
+    for m in matchers:
+        if m.op == "=" and m.name in SHARD_KEY_LABELS and m.name in cols \
+                and m.value not in ("", "__none__"):
+            conds.append(F.col(m.name) == m.value)
+    return conds
+
+
+def _drop_key_columns(df: DataFrame) -> DataFrame:
+    """Project a gauge-schema frame back to its layout once the key
+    columns have served their filters."""
+    keys = [c for c in KEY_COLUMNS if c in df.columns]
+    return df.drop(*keys) if keys else df
+
+
 @dataclass
 class TsStore:
     """Metric table provider — the multi-schema registry
@@ -189,8 +220,16 @@ class TsStore:
     (MultiSchemaPartitionsExec.scala:116-142).
 
     At scale each schema is a parquet/Delta table partitioned by
-    (_ws_, _ns_, date) — selector filters push down to partition
-    pruning + row-group skipping.
+    (_ws_, _ns_, date) and sorted by _metric within files. A frame may
+    carry those physical key columns (sources.table.KEY_COLUMNS;
+    from_table keeps them): select() then twins metric equality onto
+    `_metric` and shard-key equality onto the partition columns, which
+    prunes directories, row groups and cached batches. That is sound
+    because of one invariant: sources.table._prepped derives every key
+    column from `labels` at write time (`_metric` = labels.__name__,
+    `_ws_`/`_ns_` = the label or `__none__`), so each twin is implied by
+    the map filter it twins and is never weaker. select() returns the
+    schema's layout without the key columns.
     """
 
     df: DataFrame
@@ -210,8 +249,10 @@ class TsStore:
         to the O(series) index path — metadata endpoints, the plan-time
         limit estimator, and density-aware window selection all light
         up with no flag. Pass an explicit path to attach a
-        non-conventional location, or None to opt out."""
-        df = spark.read.parquet(path).select("labels", "ts", "value")
+        non-conventional location, or None to opt out. The mounted
+        frame keeps the table's key columns (sources.table.series_frame)
+        so select() can prune on them."""
+        df = series_frame(spark.read.parquet(path))
         if partkey_path == "auto":
             from filodb_spark.sources.table import hadoop_fs
             probe = path.rstrip("/") + "_partkey"
@@ -376,8 +417,9 @@ class TsStore:
             if sel.metric is not None and \
                     any(m.value != self.type_name(sel.metric)
                         for m in type_matchers):
-                base = self.df if schema == "gauge" else self.hist_df
-                return base.where(F.lit(False))
+                if schema == "gauge":
+                    return _drop_key_columns(self.df.where(F.lit(False)))
+                return self.hist_df.where(F.lit(False))
             sel = A.VectorSelector(
                 sel.metric,
                 tuple(m for m in sel.matchers if m.name != "_type_"),
@@ -387,30 +429,33 @@ class TsStore:
             return self._select_multischema(sel.matchers, type_value,
                                             ts_lo, ts_hi)
         if schema == "gauge":
-            df = self.df
+            conds = _key_twins(self.df, sel.metric, sel.matchers)
+            if sel.metric:
+                conds.append(F.col("labels")[METRIC] == sel.metric)
+            return _drop_key_columns(
+                _apply_label_matchers(self.df, sel.matchers, extra=conds))
+        base = sel.metric if schema == "hist" else \
+            self.hist_base_of(sel.metric)
+        df = _apply_label_matchers(self.hist_df, (), extra=[
+            F.col("labels")[METRIC] == base,
+            *_key_twins(self.hist_df, base, sel.matchers)])
+        if schema == "hist_sum":
+            df = df.select("labels", "ts", F.col("sum").alias("value"))
+        elif schema == "hist_count":
+            df = df.select("labels", "ts", F.col("count").alias("value"))
+        elif schema == "hist_bucket":
+            # explode to one series per bucket with an `le` label
+            from filodb_spark.kernels.histogram import (explode_hist,
+                                                        le_label)
+            ex = explode_hist(df.select("labels", "ts", "hist"))
+            ex = ex.withColumn("labels", F.map_concat(
+                "labels", F.create_map(F.lit("le"),
+                                       le_label(F.col("bucket_le")))))
+            df = ex.select("labels", "ts", "value")
         else:
-            base = sel.metric if schema == "hist" else \
-                self.hist_base_of(sel.metric)
-            df = self.hist_df.where(F.col("labels")[METRIC] == base)
-            if schema == "hist_sum":
-                df = df.select("labels", "ts", F.col("sum").alias("value"))
-            elif schema == "hist_count":
-                df = df.select("labels", "ts", F.col("count").alias("value"))
-            elif schema == "hist_bucket":
-                # explode to one series per bucket with an `le` label
-                from filodb_spark.kernels.histogram import (explode_hist,
-                                                            le_label)
-                ex = explode_hist(df.select("labels", "ts", "hist"))
-                ex = ex.withColumn("labels", F.map_concat(
-                    "labels", F.create_map(F.lit("le"),
-                                           le_label(F.col("bucket_le")))))
-                df = ex.select("labels", "ts", "value")
-            else:
-                extra = [c for c in ("min", "max") if c in self.hist_df.columns]
-                df = df.select("labels", "ts", "sum", "count", "hist", *extra)
-        metric_cond = (F.col("labels")[METRIC] == sel.metric) \
-            if sel.metric and schema == "gauge" else None
-        return _apply_label_matchers(df, sel.matchers, extra=metric_cond)
+            extra = [c for c in ("min", "max") if c in self.hist_df.columns]
+            df = df.select("labels", "ts", "sum", "count", "hist", *extra)
+        return _apply_label_matchers(df, sel.matchers)
 
     def type_expr(self, metric_col: Column) -> Column:
         """Schema name for the virtual `_type_` label as a column
@@ -427,10 +472,13 @@ class TsStore:
                           F.lit("otel-exp-delta-histogram")).otherwise(expr)
         return expr
 
-    def _hist_full(self) -> DataFrame:
+    def _hist_full(self, matchers=()) -> DataFrame:
+        """Matcher-filtered histogram samples in the hist layout."""
         extra = [c for c in ("min", "max") if c in self.hist_df.columns]
-        return self.hist_df.select("labels", "ts", "sum", "count",
-                                   "hist", *extra)
+        return _apply_label_matchers(
+            self.hist_df, matchers,
+            extra=_key_twins(self.hist_df, None, matchers)).select(
+                "labels", "ts", "sum", "count", "hist", *extra)
 
     def _select_multischema(self, matchers, type_value: str | None,
                             ts_lo: int | None = None,
@@ -453,12 +501,13 @@ class TsStore:
         considered and rejected: an attached index makes no coverage
         promise for non-gauge schemas (see _index_covers)."""
         matchers = tuple(m for m in matchers if m.name != "_type_")
-        gauge = _apply_label_matchers(self.df, matchers)
+        gauge = _drop_key_columns(_apply_label_matchers(
+            self.df, matchers, extra=_key_twins(self.df, None, matchers)))
         if type_value is not None:
             if type_value in ("prom-histogram", "otel-exp-delta-histogram"):
                 if self.hist_df is None:
                     return gauge.where(F.lit(False))
-                hist = _apply_label_matchers(self._hist_full(), matchers)
+                hist = self._hist_full(matchers)
                 exp = list(self.exp_hist_metrics)
                 if not exp:
                     return hist if type_value == "prom-histogram" \
@@ -477,7 +526,7 @@ class TsStore:
                                    if type_value == "delta-counter"
                                    else ~name.isin(delta))
             return gauge.where(F.lit(False))
-        hist = _apply_label_matchers(self._hist_full(), matchers)
+        hist = self._hist_full(matchers)
         memo = self.__dict__.setdefault("_multischema_memo", {})
         key = (tuple((m.name, m.op, m.value) for m in matchers),
                ts_lo, ts_hi)
@@ -608,11 +657,11 @@ class TsStore:
         mount, which resets the memo)."""
         cache = self.__dict__.setdefault("_index_cover_memo", {})
         if metric not in cache:
-            df = self.partkey_df.where(F.col("labels")[METRIC] == metric)
-            if "_metric" in self.partkey_df.columns:
-                # pushable twin: row-group min/max skipping on the
-                # sorted physical column
-                df = df.where(F.col("_metric") == metric)
+            # the pushable twin skips row groups on the sorted
+            # physical `_metric` column
+            df = _apply_label_matchers(self.partkey_df, (), extra=[
+                F.col("labels")[METRIC] == metric,
+                *_key_twins(self.partkey_df, metric, ())])
             cache[metric] = not df.isEmpty()
         return cache[metric]
 
@@ -671,22 +720,12 @@ class TsStore:
                 return df.where(F.lit(False)).select(
                     "labels", "_sk", "first_ts", "last_ts", "samples")
         matchers = tuple(m for m in sel.matchers if m.name != "_type_")
+        # the writer sorts files by _metric and partitions by the shard
+        # keys, so the twins prune row groups and directories at scan
+        conds = _key_twins(df, metric, matchers)
         if metric:
-            df = df.where(F.col("labels")[METRIC] == metric)
-            if raw_shape:
-                # pushable twin of the map filter: the writer sorts
-                # files by _metric, so this prunes row groups at scan
-                df = df.where(F.col("_metric") == metric)
-        if raw_shape:
-            from filodb_spark.sources.table import SHARD_KEY_LABELS
-            for m in matchers:
-                # partition-directory pruning twin for shard-key
-                # equality (redundant with the map filter, never
-                # weaker: __none__/"" sentinel values stay map-only)
-                if m.op == "=" and m.name in SHARD_KEY_LABELS and \
-                        m.value not in ("", "__none__"):
-                    df = df.where(F.col(m.name) == m.value)
-        df = _apply_label_matchers(df, matchers)
+            conds.append(F.col("labels")[METRIC] == metric)
+        df = _apply_label_matchers(df, matchers, extra=conds)
         if raw_shape:
             from filodb_spark.partkey import merge_partkey_rows
             df = merge_partkey_rows(df)
@@ -730,6 +769,29 @@ def _leaf_selectors(node, default_window_ms: int, _window=None):
                 if dataclasses.is_dataclass(x) and \
                         not isinstance(x, A.LabelMatcher):
                     yield from _leaf_selectors(x, default_window_ms, _window)
+
+
+# aggregations that emit exactly one series per `by` group, labelled
+# with that group's labels and nothing else
+_GROUP_LABELLED_AGGS = frozenset({"sum", "avg", "min", "max", "count",
+                                  "group", "stddev", "stdvar"})
+
+
+def _unique_join_keys(node, on, ignoring) -> bool:
+    """Is every series of `node` alone on its join key, provably from
+    the AST? True for `<op> by (L)` with a group-labelled op, `__name__`
+    not in L and a join key that keeps all of L (default matching,
+    ignoring(I) with I disjoint from L, or on(K) with L inside K): each
+    output series is labelled by its distinct group, and the key keeps
+    every label it has. Such a side needs no duplicate-key check."""
+    while isinstance(node, A.Paren):
+        node = node.expr
+    if not (isinstance(node, A.Aggregation) and node.by is not None
+            and node.op in _GROUP_LABELLED_AGGS and METRIC not in node.by):
+        return False
+    if on is not None:
+        return set(node.by) <= set(on)
+    return not set(node.by) & set(ignoring)
 
 
 class Scalar:
@@ -2200,7 +2262,10 @@ class PromQLEngine:
                 out = bin_k.vector_binary_op(
                     l, r, e.op, on=list(e.on) if e.on is not None else None,
                     ignoring=e.ignoring, cardinality=card, include=e.include,
-                    bool_modifier=e.bool_modifier)
+                    bool_modifier=e.bool_modifier,
+                    check_cardinality=tuple(
+                        not _unique_join_keys(side, e.on, e.ignoring)
+                        for side in (e.lhs, e.rhs)))
                 if card == "one-to-one":
                     out = self._enforce_join_limit(out, l, r)
                 return out

@@ -23,6 +23,10 @@ from pyspark.errors import AnalysisException
 from filodb_spark.kernels.binary import canonical_labels
 
 SHARD_KEY_LABELS = ("_ws_", "_ns_")
+# physical key columns _prepped derives from `labels` at write time;
+# readers that keep them can push metric/shard-key equality into the
+# scan (TsStore.select, TsStore.select_partkeys)
+KEY_COLUMNS = ("_metric", *SHARD_KEY_LABELS)
 
 
 def _prepped(df: DataFrame, shard_labels: tuple[str, ...]) -> DataFrame:
@@ -35,6 +39,14 @@ def _prepped(df: DataFrame, shard_labels: tuple[str, ...]) -> DataFrame:
                                          "yyyy-MM-dd"))
                .withColumn("_metric", F.col("labels")["__name__"])
                .withColumn("_sk", canonical_labels(F.col("labels"))))
+
+
+def series_frame(df: DataFrame) -> DataFrame:
+    """A series-table read projected to the gauge layout (labels, ts,
+    value) plus whichever KEY_COLUMNS it carries — the frame TsStore
+    mounts, so selectors can prune on the key columns."""
+    return df.select("labels", "ts", "value",
+                     *[c for c in KEY_COLUMNS if c in df.columns])
 
 
 def hadoop_fs(spark: SparkSession, path: str):
@@ -336,10 +348,12 @@ def write_series_table_zorder(df: DataFrame, path: str,
 
 def read_series_table(spark: SparkSession, path: str,
                       format: str = "parquet") -> DataFrame:
-    """Read back to the universal layout. Filters on shard labels /
-    __name__ / ts prune partitions and row groups (Catalyst pushes the
-    label-column predicates into the scan; on format='delta' the Delta
-    log's per-file stats additionally skip whole files)."""
+    """Read back to the universal layout plus the physical key columns
+    (`_metric`, shard labels, `date`). Filters on THOSE columns and on
+    ts prune partitions and row groups (on format='delta' the Delta
+    log's per-file stats additionally skip whole files); a filter on
+    the `labels` map alone prunes nothing — TsStore.select adds the
+    key-column twins for the engine's scans."""
     if format == "delta":
         _require_delta(spark)
     df = spark.read.format(format).load(path)

@@ -117,6 +117,66 @@ class TestQueryTimeout:
             run_with_timeout(spark, lambda: (_ for _ in ()).throw(
                 ValueError("boom")), 5.0)
 
+    def test_scheduler_pools_are_recycled(self, spark):
+        """Spark never removes a FAIR pool, so per-request pool names
+        must be recycled: the pool count tracks peak concurrency, not
+        the number of requests served."""
+        from concurrent.futures import ThreadPoolExecutor
+        from filodb_spark.http_server import run_with_timeout
+        sc = spark.sparkContext
+
+        def request(timeout_s=None):
+            return run_with_timeout(
+                spark, lambda: spark.range(4).count(), timeout_s)
+
+        def pools():
+            return sc._jsc.sc().getAllPools().size()
+
+        request()
+        base = pools()
+        for i in range(20):
+            request(5.0 if i % 2 else None)
+        assert pools() == base
+        with ThreadPoolExecutor(4) as ex:
+            assert list(ex.map(lambda _: request(), range(20))) == [4] * 20
+        assert pools() <= base + 3
+
+    def test_pool_free_list_never_hands_out_a_held_name(self):
+        """Stress: more threads than cores acquiring/releasing pool
+        names with a short switch interval — a lost update would hand
+        one name to two requests at once or leak names."""
+        import sys
+        import threading
+        from filodb_spark import http_server as hs
+        held, clash, lock = set(), [], threading.Lock()
+
+        def worker():
+            for _ in range(300):
+                name = hs._acquire_pool()
+                with lock:
+                    if name in held:
+                        clash.append(name)
+                    held.add(name)
+                with lock:
+                    held.discard(name)
+                hs._release_pool(name)
+
+        before = len(hs._free_pools)
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=worker) for _ in range(12)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(60)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(t.is_alive() for t in threads)
+        assert clash == []
+        free = hs._free_pools
+        assert len(free) == len(set(free)) and len(free) <= before + 12
+
     def test_timeout_param_parsing(self):
         from filodb_spark.http_server import _parse_timeout
         assert _parse_timeout({}) is None

@@ -439,8 +439,8 @@ class TestVectorizedCodecInternals:
         assert decode_write_request(_len_delim(1, canon + label)) == \
             [({"n": "v"}, [(5, 1.0)])]
         # non-minimal (overlong but in-bounds) ts varint: strict parses
-        # it; the fast path must either agree or refuse — it refuses
-        # because the re-encoded length differs from the canonical one
+        # it; the fast path must either agree or refuse — it accepts it
+        # and decodes the same value as strict
         overlong = _len_delim(2, _field(1, 1) + struct.pack("<d", 2.0)
                               + _field(2, 0) + b"\x85\x00")
         got = _decode_series_fast(overlong)
