@@ -22,8 +22,9 @@ from filodb_spark.partkey import (append_partkey_updates,
 from filodb_spark.promql.compiler import PromQLEngine, TsStore
 
 
-# slow battery: skipped by default for the driver's pytest budget (SPARK_GRAFT_RUN_SLOW=1 runs it; scripts/round_close.py does)
-pytestmark = pytest.mark.slow
+# @slow tests are skipped by default to keep the default profile short
+# (SPARK_GRAFT_RUN_SLOW=1 runs them; scripts/round_close.py does).
+# The one unmarked test keeps this entry point in the default profile.
 
 
 def _samples(spark, rows):
@@ -52,6 +53,7 @@ def samples(spark):
     return _samples(spark, rows).cache()
 
 
+@pytest.mark.slow
 def test_partkey_from_samples_one_row_per_series(spark, samples):
     pk = partkey_from_samples(samples)
     got = pk.collect()
@@ -62,6 +64,7 @@ def test_partkey_from_samples_one_row_per_series(spark, samples):
         assert r.samples == 10
 
 
+@pytest.mark.slow
 def test_write_read_roundtrip_and_partitioning(spark, samples, tmp_path):
     path = str(tmp_path / "pk")
     write_partkey_table(samples, path)
@@ -74,6 +77,7 @@ def test_write_read_roundtrip_and_partitioning(spark, samples, tmp_path):
                                "samples"}
 
 
+@pytest.mark.slow
 def test_append_merge_and_compact(spark, samples, tmp_path):
     path = str(tmp_path / "pk")
     write_partkey_table(samples, path)
@@ -100,6 +104,7 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+@pytest.mark.slow
 def test_metadata_equivalence_with_and_without_partkey(spark, samples):
     plain = TsStore(samples)
     indexed = TsStore(samples, partkey_df=partkey_from_samples(samples))
@@ -127,6 +132,7 @@ def test_series_endpoint_matches_and_carries_type(spark, samples):
         assert r["labels"]["_ws_"] == "prod"
 
 
+@pytest.mark.slow
 def test_time_range_span_overlap(spark, samples):
     indexed = TsStore(samples, partkey_df=partkey_from_samples(samples))
     # range fully before any data -> empty; overlapping -> all series
@@ -138,6 +144,7 @@ def test_time_range_span_overlap(spark, samples):
                                  start_ms=1_090_001).count() == 0
 
 
+@pytest.mark.slow
 def test_matchers_on_partkey_path(spark, samples):
     indexed = TsStore(samples, partkey_df=partkey_from_samples(samples))
     neq = metadata.series(indexed, 'http_requests{instance!="a"}')
@@ -146,6 +153,7 @@ def test_matchers_on_partkey_path(spark, samples):
     assert rex.count() == 4
 
 
+@pytest.mark.slow
 def test_type_matcher_gates_partkey_scan(spark, samples):
     st = TsStore(samples, partkey_df=partkey_from_samples(samples))
     from filodb_spark.promql.parser import parse
@@ -164,6 +172,7 @@ def _hist_df(spark):
         "hist struct<les: array<double>, values: array<double>>")
 
 
+@pytest.mark.slow
 def test_hist_schema_selectors_on_index(spark, samples):
     """select_partkeys resolves histogram metrics and their _sum/_count
     rewrites on the index (one part-key index per shard regardless of
@@ -192,6 +201,7 @@ def test_hist_schema_selectors_on_index(spark, samples):
             _rows(metadata.label_values(plain, "job", match=match))
 
 
+@pytest.mark.slow
 def test_metadata_plan_never_reads_sample_table(spark, samples, tmp_path):
     """With the index attached, metadata endpoint plans scan ONLY the
     part-key table files (the reference never touches chunks for
@@ -211,6 +221,7 @@ def test_metadata_plan_never_reads_sample_table(spark, samples, tmp_path):
     assert files2 and all("/series/" in f for f in files2)
 
 
+@pytest.mark.slow
 def test_hist_metadata_plan_never_reads_sample_tables(spark, samples,
                                                       tmp_path):
     """With the index attached, a HIST-metric-scoped metadata lookup
@@ -237,6 +248,7 @@ def test_hist_metadata_plan_never_reads_sample_tables(spark, samples,
     assert files and all("/hist/" in f for f in files)
 
 
+@pytest.mark.slow
 def test_from_table_auto_attaches_partkey(spark, samples, tmp_path):
     """from_table probes the `<path>_partkey` sibling convention by
     default, so production mounts get the O(series) metadata path with
@@ -258,6 +270,7 @@ def test_from_table_auto_attaches_partkey(spark, samples, tmp_path):
     assert TsStore.from_table(spark, solo_path).partkey_df is None
 
 
+@pytest.mark.slow
 def test_limit_estimator_exact_on_partkey(spark, samples):
     indexed = TsStore(samples, partkey_df=partkey_from_samples(samples))
     eng = PromQLEngine(spark, indexed)
@@ -269,6 +282,7 @@ def test_limit_estimator_exact_on_partkey(spark, samples):
         "http_requests", 5_000_000, 5_010_000, 10_000) == 0
 
 
+@pytest.mark.slow
 def test_limit_enforcement_routes_via_partkey(spark, samples):
     from filodb_spark.promql.compiler import QueryLimitException
 
@@ -284,6 +298,7 @@ def test_limit_enforcement_routes_via_partkey(spark, samples):
                             1_090_000, 10_000, Limits())
 
 
+@pytest.mark.slow
 def test_streaming_partkey_twin(spark, samples, tmp_path):
     src = tmp_path / "src"
     src.mkdir()
@@ -316,6 +331,7 @@ def test_streaming_partkey_twin(spark, samples, tmp_path):
             (batch[k].first_ts, batch[k].last_ts, batch[k].samples)
 
 
+@pytest.mark.slow
 def test_ingest_comaintains_partkey_and_compaction_refreshes(spark, samples,
                                                              tmp_path):
     """Full lifecycle: streaming ingest appends sample files AND
@@ -366,6 +382,7 @@ def test_ingest_comaintains_partkey_and_compaction_refreshes(spark, samples,
     assert vals == ["a", "b", "c"]
 
 
+@pytest.mark.slow
 def test_raw_mount_pushes_filters_below_merge(spark, samples, tmp_path):
     """from_table mounts the RAW index shape: metric equality reaches
     the scan as a pushed filter and shard-key equality as a partition
@@ -393,6 +410,7 @@ def test_raw_mount_pushes_filters_below_merge(spark, samples, tmp_path):
     assert got == want == ["a", "b", "c"]
 
 
+@pytest.mark.slow
 def test_gauge_only_index_falls_back_for_hist_lookups(spark, samples,
                                                       tmp_path):
     """ADVICE r9: an index built from the gauge series table only
@@ -427,6 +445,7 @@ def test_gauge_only_index_falls_back_for_hist_lookups(spark, samples,
     assert set(store._index_cover_memo) == {"lat"}
 
 
+@pytest.mark.slow
 class TestDownsampleMetadata:
     """Metadata over downsample mounts: a series that stopped emitting
     before raw retention exists only in the DS tables — the reference's
@@ -624,7 +643,7 @@ class TestDownsampleMetadata:
             self, spark, samples, tmp_path):
         """ds_samples_df extends SPANS only: a live series' `samples`
         stays the raw-side count (DS rows are derived from raw rows —
-        a plain union would double-count, skewing the window-mode
+        a plain union would double-count, skewing the window
         planner's density estimate), and a retired DS-only series gets
         the DS count as a stand-in. covers_ds defaults to True."""
         from filodb_spark.partkey import (read_partkey_manifest,

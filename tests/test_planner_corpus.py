@@ -18,8 +18,9 @@ from filodb_spark.promql.compiler import TsStore
 from tests.planner_spec_corpus import INSTANT_ONLY, RANGE_QUERIES
 
 
-# slow battery: skipped by default for the driver's pytest budget (SPARK_GRAFT_RUN_SLOW=1 runs it; scripts/round_close.py does)
-pytestmark = pytest.mark.slow
+# @slow tests are skipped by default to keep the default profile short
+# (SPARK_GRAFT_RUN_SLOW=1 runs them; scripts/round_close.py does).
+# The one unmarked test keeps this entry point in the default profile.
 
 T0 = 1_700_000_000_000
 
@@ -41,6 +42,7 @@ def engine(spark):
 
 
 class TestPlannerCorpus:
+    @pytest.mark.slow
     def test_range_corpus_compiles(self, engine):
         failures = []
         for q in RANGE_QUERIES:

@@ -18,10 +18,12 @@ from filodb_spark.streaming.downsample import (downsample, range_function_ds,
 from filodb_spark.streaming.ingest import (dedupe_batch, parse_json_records,
                                            start_ingest)
 
-# slow battery: skipped by default for the driver's pytest budget (SPARK_GRAFT_RUN_SLOW=1 runs it; scripts/round_close.py does)
-pytestmark = pytest.mark.slow
+# @slow tests are skipped by default to keep the default profile short
+# (SPARK_GRAFT_RUN_SLOW=1 runs them; scripts/round_close.py does).
+# The one unmarked test keeps this entry point in the default profile.
 
 
+@pytest.mark.slow
 class TestInflux:
     def test_parse_basic(self, spark):
         lines = [
@@ -76,6 +78,7 @@ class TestInflux:
         assert abs(r["ts"] - time.time() * 1000) < 60_000
 
 
+@pytest.mark.slow
 class TestJsonRecordHardening:
     def test_hostile_records_drop_not_crash(self, spark):
         recs = [
@@ -91,6 +94,7 @@ class TestJsonRecordHardening:
         assert all(r["labels"]["__name__"] == "m" for r in out)
 
 
+@pytest.mark.slow
 class TestDownsample:
     def _raw(self, spark):
         rows = [("a", i * 60_000, float(i)) for i in range(10)]
@@ -152,6 +156,7 @@ class TestDownsample:
 
 
 class TestStreamingIngest:
+    @pytest.mark.slow
     def test_checkpoint_restart_recovery(self, spark, tmp_path):
         """Restart semantics (TimeSeriesShard offset-watermark recovery
         analog): a second run from the same checkpoint processes only
@@ -207,6 +212,7 @@ class TestStreamingIngest:
         assert got.count() == 5  # dup dropped
         assert got.where(F.col("labels")["__name__"] == "m").count() == 5
 
+    @pytest.mark.slow
     def test_dedupe_batch(self, spark):
         df = spark.createDataFrame(
             [("a", 1, 1.0), ("a", 1, 2.0), ("a", 2, 3.0)],
@@ -215,6 +221,7 @@ class TestStreamingIngest:
         assert {(r["ts"], r["value"]) for r in out.collect()} == {(1, 2.0), (2, 3.0)}
 
 
+@pytest.mark.slow
 class TestMetadata:
     @pytest.fixture()
     def store(self, spark):
@@ -249,6 +256,7 @@ class TestMetadata:
         assert r["total_series"] == 3 and r["active_series"] == 0
 
 
+@pytest.mark.slow
 class TestStatefulResets:
     def _run_batch(self, spark, src, out, ckpt):
         from filodb_spark.streaming.stateful import reset_events
@@ -285,6 +293,7 @@ class TestStatefulResets:
         assert got == {("a", 3): 20.0, ("b", 2): 1.0}
 
 
+@pytest.mark.slow
 class TestSaltedAndChunkMeta:
     def test_salted_sum_matches_plain(self, spark):
         from filodb_spark.kernels.aggregations import salted_sum
@@ -307,6 +316,7 @@ class TestSaltedAndChunkMeta:
         assert min(r["ts_min"] for r in meta) == 1_700_000_000_000
 
 
+@pytest.mark.slow
 class TestKafkaWireE2E:
     """Kafka ingest path e2e WITHOUT a broker (none can run in this
     container): records in the kafka source's exact wire frame
@@ -364,6 +374,7 @@ class TestKafkaWireE2E:
         assert rate[0]["value"] == pytest.approx(0.2, rel=1e-6)
 
 
+@pytest.mark.slow
 class TestStreamingDownsample:
     def test_matches_batch_downsample(self, spark, tmp_path):
         """The streaming rollup must agree row-for-row with the batch
@@ -404,6 +415,7 @@ class TestStreamingDownsample:
         assert len(g) >= len(b) - 2     # at most the last window per series open
 
 
+@pytest.mark.slow
 class TestStreamingExport:
     """Streaming twin of the batch exporter: same cascade, same
     partitioned layout, row-equal to export_rows, restart-safe."""
@@ -544,6 +556,7 @@ class TestStreamingExport:
         assert {r["metric"] for r in got.collect()} == {"lat_bucket"}
 
 
+@pytest.mark.slow
 class TestStreamingDocDedup:
     def test_first_occurrence_survives_across_batches(self, spark, tmp_path):
         """Streaming exact dedup: duplicates inside a batch AND re-sent
@@ -591,6 +604,7 @@ class TestStreamingDocDedup:
         assert len(set(fps)) == 3
 
 
+@pytest.mark.slow
 class TestStreamingSessionize:
     def test_sessions_close_after_gap(self, spark, tmp_path):
         """Native session_window sessionization: events within the gap
@@ -636,6 +650,7 @@ class TestStreamingSessionize:
         assert ("u2", 1, 7.0, 600.0) in got
 
 
+@pytest.mark.slow
 class TestStreamingFunnel:
     def test_incremental_matches_batch_on_in_order_input(self, spark,
                                                          tmp_path):
@@ -721,6 +736,7 @@ class TestStreamingFunnel:
         assert depths == {"alice": 2, "bob": 1}
 
 
+@pytest.mark.slow
 class TestStreamingRolling:
     def test_matches_batch_across_microbatches(self, spark, tmp_path):
         """Two in-order micro-batches (incl. same-ts duplicates within a
@@ -768,6 +784,7 @@ class TestStreamingRolling:
         assert got[(1, 1600, 8.0)] == (2, 12.0)
 
 
+@pytest.mark.slow
 class TestInfluxRecordSpecParity:
     """InfluxRecordSpec goldens ported (reference:
     gateway/src/test/scala/.../InfluxRecordSpec.scala) against the
@@ -862,6 +879,7 @@ class TestInfluxRecordSpecParity:
         assert out[0]["value"] == pytest.approx(0.047794117647)
 
 
+@pytest.mark.slow
 class TestStreamingDownsampleCounter:
     def test_matches_batch_counter_downsample(self, spark, tmp_path):
         """The incremental counter marker must agree with the batch
@@ -917,6 +935,7 @@ class TestStreamingDownsampleCounter:
                            if (s, t) in tails}
 
 
+@pytest.mark.slow
 class TestStreamingDownsampleHist:
     """streaming_downsample_hist vs the batch downsample_hist: identical
     rows except the per-series TAIL (pending until a successor proves its
@@ -1000,6 +1019,7 @@ class TestStreamingDownsampleHist:
         self._run(spark, tmp_path, minmax=True)
 
 
+@pytest.mark.slow
 class TestStreamingDownsampleDelta:
     """Delta-schema streaming twins: pure window aggregations, row-equal
     to the batch downsamplers on watermark-closed windows."""
@@ -1079,6 +1099,7 @@ class TestStreamingDownsampleDelta:
         assert len(got) > 5
 
 
+@pytest.mark.slow
 class TestStreamingDownsampleHistRandom:
     """Randomized streaming-vs-batch battery for the hist twin: random
     cadence, dips, NaN counts and NaN mins across 8 series, replayed in
@@ -1161,6 +1182,7 @@ class TestStreamingDownsampleHistRandom:
         assert len(got) > 40
 
 
+@pytest.mark.slow
 class TestStreamingQualityOps:
     def test_c4_and_gopher_apply_unchanged_to_streams(self, spark,
                                                       tmp_path):
