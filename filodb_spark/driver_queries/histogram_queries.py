@@ -25,7 +25,8 @@ def q_hist_quantile(spark, sf_dir):
     ex = explode_to_steps(drop_nan(ev), grid, WINDOW)
     h = bucketize(ex, ["event_type", "t"], LES)
     return h.select("event_type", "t",
-                    F.round(hist_quantile(Q, F.col("hist")), 6).alias("value"))
+                    F.round(hist_quantile(Q, "hist.les", "hist.values"), 6)
+                    .alias("value"))
 
 
 def q_hist_sum_quantile(spark, sf_dir):
@@ -35,7 +36,7 @@ def q_hist_sum_quantile(spark, sf_dir):
     # one bucketize -> identical schemes by construction
     summed = hist_sum(h, ["t"], check_schemes=False)
     return summed.select("t",
-                         F.round(hist_quantile(Q, F.col("hist")), 6)
+                         F.round(hist_quantile(Q, "hist.les", "hist.values"), 6)
                          .alias("value"))
 
 
@@ -158,7 +159,8 @@ def q_exp_hist_quantile(spark, sf_dir):
     h = bucketize(ex, ["event_type", "t"], EXP_LES)
     return h.select(
         "event_type", "t",
-        F.round(hist_quantile(Q, F.col("hist"), exponential=True), 6)
+        F.round(hist_quantile(Q, "hist.les", "hist.values",
+                              exponential=True), 6)
         .alias("value"))
 
 

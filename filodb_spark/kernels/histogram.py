@@ -268,7 +268,20 @@ def base2_exp_les(scale: int, start_index: int, num_pos: int) -> list[float]:
                     for i in range(1, num_pos + 1)]
 
 
-def monotonic_values(vals: Column) -> Column:
+def _sql_operand(x: float | str) -> str:
+    """A kernel operand as SQL text: a string is already a SQL expression
+    (typically a column name); a number becomes a DOUBLE literal."""
+    if isinstance(x, str):
+        return f"({x})"
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{x!r}D"
+
+
+def monotonic_values(vals: str) -> Column:
     """HistogramQuantileMapper.makeMonotonic
     (HistogramQuantileMapper.scala:139-147): cumulative bucket counts on
     increasing le must be non-decreasing; a NaN (bucket no longer
@@ -277,23 +290,27 @@ def monotonic_values(vals: Column) -> Column:
     replaced with the running max. Without the repair, a quantile rank
     crossing above a dipped bucket interpolates against the dip and
     lands too high (e.g. [15,12,20] at rank 18: raw 3.5 vs repaired
-    3.2 on les [1,2,4])."""
-    return F.aggregate(
-        vals,
-        F.struct(F.lit(0.0).alias("mx"),
-                 F.array().cast("array<double>").alias("out")),
-        lambda acc, v: F.struct(
-            F.when(~F.isnan(v) & (v > acc["mx"]), v)
-             .otherwise(acc["mx"]).alias("mx"),
-            F.concat(acc["out"], F.array(
-                F.when(F.isnan(v) | (v < acc["mx"]), acc["mx"])
-                 .otherwise(v))).alias("out")),
-        lambda acc: acc["out"])
+    3.2 on les [1,2,4]).
+
+    `vals` is a SQL expression (a column name) of the counts array. The
+    result is a fold: a caller referencing it more than once (as
+    hist_quantile does with a histogram's values) must first bind it to
+    a column of its own `select`, or every reference re-runs the fold."""
+    fixed = ("CASE WHEN isnan(_mv_v) OR (_mv_v < _mv_acc.mx) "
+             "THEN _mv_acc.mx ELSE _mv_v END")
+    return F.expr(
+        f"aggregate({vals}, "
+        f"named_struct('mx', 0.0D, 'out', CAST(array() AS array<double>)), "
+        f"(_mv_acc, _mv_v) -> named_struct("
+        f"'mx', CASE WHEN (NOT isnan(_mv_v)) AND (_mv_v > _mv_acc.mx) "
+        f"THEN _mv_v ELSE _mv_acc.mx END, "
+        f"'out', concat(_mv_acc.out, array({fixed}))), "
+        f"_mv_acc -> _mv_acc.out)")
 
 
-def hist_quantile(q: Column | float, hist: Column,
-                  min_hint: Column | None = None,
-                  max_hint: Column | None = None,
+def hist_quantile(q: float | str, les: str, vals: str,
+                  min_hint: float | str | None = None,
+                  max_hint: float | str | None = None,
                   even_distribution: bool = False,
                   exponential: bool = False) -> Column:
     """Histogram.quantile (Histogram.scala:62-112): cumulative-LE linear
@@ -306,54 +323,72 @@ def hist_quantile(q: Column | float, hist: Column,
     bounds tighten to it — in particular a +Inf top bucket interpolates
     up to max instead of clamping (Histogram.scala:81-91).
     even_distribution: fraction = rank/(count+1)
-    (histogram_max_quantile_even)."""
-    if not isinstance(q, Column):
-        q = F.lit(float(q))
-    les, vals = hist["les"], hist["values"]
-    n = F.size(les)
-    total = F.element_at(vals, -1)
-    rank = q * total
-    idx = F.aggregate(
-        vals,
-        F.struct(F.lit(0).alias("i"), F.lit(-1).alias("found")),
-        lambda acc, v: F.struct(
-            (acc["i"] + 1).alias("i"),
-            F.when((acc["found"] < 0) & (v >= rank), acc["i"] + 1)
-             .otherwise(acc["found"]).alias("found")),
-        lambda acc: acc["found"])
-    le = F.element_at(les, idx)
-    cum = F.element_at(vals, idx)
-    lo_le = F.when(idx > 1, F.element_at(les, idx - 1)).otherwise(F.lit(0.0))
-    lo_cum = F.when(idx > 1, F.element_at(vals, idx - 1)).otherwise(F.lit(0.0))
+    (histogram_max_quantile_even).
+
+    Operands are SQL expressions — `les`/`vals` name the bound and count
+    arrays (e.g. "hist.les", "hist.values") — or, for q and the hints,
+    numbers. The kernel is one SQL expression: a single parse on the JVM
+    instead of a py4j call per Column operator.
+
+    Evaluation order: q outside [0, 1] and a NULL counts array are
+    decided first; everything else is ONE fold over the counts. The fold
+    finds the first bucket index whose cumulative count reaches the rank
+    (-1 if none), and its `finish` lambda computes the result from that
+    index: bucket bounds, hint tightening, interpolation and the
+    remaining CASE arms. The index is a lambda variable there, so it is
+    evaluated once per row. `les`/`vals` are read several times: bind a
+    computed array to a column first (see monotonic_values)."""
+    q = _sql_operand(q)
+    inf, nan = _sql_operand(float("inf")), _sql_operand(float("nan"))
+    total = f"element_at({vals}, -1)"
+    idx = "_hq.found"
+    le = f"element_at({les}, {idx})"
+    cum = f"element_at({vals}, {idx})"
+    lo_le = (f"CASE WHEN {idx} > 1 THEN element_at({les}, {idx} - 1) "
+             f"ELSE 0.0D END")
+    lo_cum = (f"CASE WHEN {idx} > 1 THEN element_at({vals}, {idx} - 1) "
+              f"ELSE 0.0D END")
     b_start, b_end = lo_le, le
     if min_hint is not None:
-        b_start = F.when((min_hint > b_start) & (min_hint <= b_end), min_hint) \
-            .otherwise(b_start)
+        lo = _sql_operand(min_hint)
+        b_start = (f"CASE WHEN ({lo} > ({b_start})) AND ({lo} <= {b_end}) "
+                   f"THEN {lo} ELSE {b_start} END")
     if max_hint is not None:
-        b_end = F.when((max_hint > b_start) & (max_hint <= b_end), max_hint) \
-            .otherwise(b_end)
-    count = cum - lo_cum
-    frac = (rank - lo_cum) / (count + (1 if even_distribution else 0))
+        hi = _sql_operand(max_hint)
+        b_end = (f"CASE WHEN ({hi} > ({b_start})) AND ({hi} <= ({b_end})) "
+                 f"THEN {hi} ELSE {b_end} END")
+    frac = (f"((({q} * {total}) - ({lo_cum})) / "
+            f"(({cum} - ({lo_cum})) + {1 if even_distribution else 0}))")
+    linear = f"(({b_start}) + ((({b_end}) - ({b_start})) * {frac}))"
     if exponential:
         # log-scale interpolation for exponential bucket schemes
         # (Histogram.scala:97-105); from-zero first bucket stays linear
-        log2 = lambda c: F.log(c) / F.lit(math.log(2.0))
-        log_interp = F.pow(F.lit(2.0), log2(b_start)
-                           + (log2(b_end) - log2(b_start)) * frac)
-        interp = F.when(b_start == 0, b_start + (b_end - b_start) * frac) \
-            .otherwise(log_interp)
+        log2 = lambda c: f"(ln({c}) / {_sql_operand(math.log(2.0))})"
+        log_interp = (f"power(2.0D, ({log2(b_start)} + "
+                      f"(({log2(b_end)} - {log2(b_start)}) * {frac})))")
+        interp = (f"CASE WHEN ({b_start}) = 0 THEN {linear} "
+                  f"ELSE {log_interp} END")
     else:
-        interp = b_start + (b_end - b_start) * frac
-    nan = F.lit(float("nan"))
+        interp = linear
     # NOTE: the reference does NOT NaN on a missing +Inf top bucket
     # (finite-top schemes like exp histograms interpolate in the last
     # bucket); +Inf only triggers the clamp (Histogram.scala:85-89)
-    return (F.when(q < 0, F.lit(float("-inf")))
-             .when(q > 1, F.lit(float("inf")))
-             .when((n < 2) | (total == 0) | total.isNull(), nan)
-             .when(b_end == F.lit(float("inf")), lo_le)
-             .when(cum == lo_cum, lo_le)
-             .otherwise(interp))
+    finish = (f"CASE WHEN ((size({les}) < 2) OR ({total} = 0)) "
+              f"OR ({total} IS NULL) THEN {nan} "
+              f"WHEN ({b_end}) = {inf} THEN {lo_le} "
+              f"WHEN {cum} = ({lo_cum}) THEN {lo_le} "
+              f"ELSE {interp} END")
+    search = (f"(_hq_acc, _hq_v) -> named_struct('i', _hq_acc.i + 1, "
+              f"'found', CASE WHEN (_hq_acc.found < 0) AND "
+              f"(_hq_v >= ({q} * {total})) THEN _hq_acc.i + 1 "
+              f"ELSE _hq_acc.found END)")
+    # a NULL counts array (which the fold would pass through as NULL)
+    # reads as an empty histogram: NaN
+    return F.expr(
+        f"CASE WHEN {q} < 0 THEN {_sql_operand(float('-inf'))} "
+        f"WHEN {q} > 1 THEN {inf} WHEN ({vals}) IS NULL THEN {nan} "
+        f"ELSE aggregate({vals}, named_struct('i', 0, 'found', -1), "
+        f"{search}, _hq -> {finish}) END")
 
 
 def hist_fraction(lo: float, hi: float, hist: Column) -> Column:

@@ -1693,9 +1693,9 @@ class PromQLEngine:
                 if use_max and "hmax" not in v.columns:
                     raise ValueError(f"{name} requires a max-column schema")
                 val = hist_quantile(
-                    q, F.col("hist"),
-                    min_hint=F.col("hmin") if "hmin" in v.columns else None,
-                    max_hint=F.col("hmax") if use_max else None,
+                    q, "hist.les", "hist.values",
+                    min_hint="hmin" if "hmin" in v.columns else None,
+                    max_hint="hmax" if use_max else None,
                     even_distribution=name.endswith("_even"),
                     exponential=self._arg_is_exp_hist(e.args[1]))
                 return v.select("labels", "t", val.alias("value"))
@@ -1910,25 +1910,30 @@ class PromQLEngine:
         le_raw = labels["le"]
         le_num = F.when(le_raw.isin("+Inf", "Inf", "inf"),
                         F.lit(float("inf"))).otherwise(le_raw.cast("double"))
-        b = (v.withColumn("le", le_num)
-              .where(F.col("le").isNotNull())
-              .withColumn("labels", no_le)
-              .withColumn("_sk", bin_k.series_key(F.col("labels"))))
-        per = (b.groupBy("_sk", "t")
-                .agg(F.array_sort(F.collect_list(F.struct("le", "value")))
-                     .alias("_buckets"),
-                     F.first("labels").alias("labels")))
+        b = v.select(no_le.alias("labels"), "t", "value", le_num.alias("le"))
+        # rows without a numeric `le` are skipped inside the aggregate
+        # (collect_list drops NULLs), not by a filter before it: Catalyst
+        # pushes a filter on a label-derived column down to the scan,
+        # where it re-derives the labels map per raw sample
+        bucket = F.when(F.col("le").isNotNull(), F.struct("le", "value"))
+        per = (b.groupBy(bin_k.series_key(F.col("labels")).alias("_sk"), "t")
+                .agg(F.array_sort(F.collect_list(bucket)).alias("_buckets"),
+                     F.first("labels").alias("labels"))
+                .where(F.size("_buckets") > 0))
         from filodb_spark.kernels.histogram import (hist_quantile,
-                                                    hist_struct,
                                                     monotonic_values)
         # makeMonotonic repair (HistogramQuantileMapper.scala:139-147):
         # non-atomic scrapes / bucket-set changes can dip or NaN the
         # cumulative counts — replaced with the running max before
-        # interpolation, exactly as the reference mapper does
-        h = hist_struct(
-            F.transform("_buckets", lambda p: p["le"]),
-            monotonic_values(F.transform("_buckets", lambda p: p["value"])))
-        return per.select("labels", "t", hist_quantile(q, h).alias("value"))
+        # interpolation, exactly as the reference mapper does. The bounds
+        # and the repaired counts are top-level columns of their own
+        # select: hist_quantile reads them several times, and Catalyst
+        # keeps a non-cheap column referenced more than once in its own
+        # Project (inside a struct it would be inlined at every read)
+        per = per.select("labels", "t", F.col("_buckets.le").alias("_les"),
+                         monotonic_values("_buckets.value").alias("_vals"))
+        return per.select("labels", "t",
+                          hist_quantile(q, "_les", "_vals").alias("value"))
 
     # ---- aggregation ----------------------------------------------------
 

@@ -95,5 +95,44 @@ def test_monotonic_values_kernel(spark):
     from filodb_spark.kernels.histogram import monotonic_values
     df = spark.createDataFrame(
         [([15.0, float("nan"), 12.0, 20.0, float("nan")],)], "vals array<double>")
-    [r] = df.select(monotonic_values(F.col("vals")).alias("v")).collect()
+    [r] = df.select(monotonic_values("vals").alias("v")).collect()
     assert r["v"] == [15.0, 15.0, 15.0, 20.0, 20.0]
+
+
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_quantile_plan_evaluates_each_fold_once(spark):
+    """Plan-shape pin: the `_bucket` quantile holds one monotone-repair
+    fold and one search fold; the hist-schema quantile holds one fold.
+    Re-inlining the bucket index or the repaired counts at each use
+    multiplies the folds (62 on the `_bucket` path before the repair
+    was bound to a column and the result moved into the fold's
+    `finish`)."""
+    rows = [({"__name__": "x_bucket", "job": j, "le": le}, t, float(v))
+            for j in ("a", "b") for t in range(0, 600_001, 60_000)
+            for le, v in (("1", t / 6e4), ("5", t / 3e4), ("+Inf", t / 2e4))]
+    df = spark.createDataFrame(
+        rows, "labels map<string,string>, ts long, value double")
+    eng = PromQLEngine(spark, TsStore(df))
+    plan = _optimized_plan(eng.query_range(
+        "histogram_quantile(0.9, sum by (le) (rate(x_bucket[5m])))",
+        300_000, 600_000, 60_000))
+    assert plan.count("aggregate(") <= 2, plan.count("aggregate(")
+
+    hist_df = spark.createDataFrame(
+        [({"__name__": "h", "job": "a"}, t, 0.0, 0.0, 0.5, 9.0,
+          ([1.0, 5.0, float("inf")], [t / 6e4, t / 3e4, t / 2e4]))
+         for t in range(0, 600_001, 60_000)],
+        "labels map<string,string>, ts long, sum double, count double, "
+        "min double, max double, "
+        "hist struct<les: array<double>, values: array<double>>")
+    gauge = spark.createDataFrame(
+        [], "labels map<string,string>, ts long, value double")
+    eng = PromQLEngine(spark, TsStore(gauge, hist_df=hist_df,
+                                      hist_metrics=("h",)))
+    for fn in ("histogram_quantile", "histogram_max_quantile"):
+        plan = _optimized_plan(eng.query_range(
+            f"{fn}(0.9, rate(h[5m]))", 300_000, 600_000, 60_000))
+        assert plan.count("aggregate(") == 1, (fn, plan.count("aggregate("))

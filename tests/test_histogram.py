@@ -23,7 +23,8 @@ def hist_df(spark, rows):
 
 def q_of(spark, les, values, q):
     df = hist_df(spark, [("a", les, values)])
-    return df.select(hist_quantile(q, F.col("hist")).alias("v")).first()["v"]
+    return df.select(hist_quantile(q, "hist.les", "hist.values")
+                     .alias("v")).first()["v"]
 
 
 class TestQuantile:
@@ -115,12 +116,13 @@ class TestExponentialBuckets:
         les = [0.0, 2.0, 4.0, 8.0]
         vals = [0.0, 10.0, 20.0, 30.0]
         df = hist_df(spark, [("a", les, vals)])
-        got = df.select(hist_quantile(0.5, F.col("hist"),
+        got = df.select(hist_quantile(0.5, "hist.les", "hist.values",
                                       exponential=True).alias("v")).first()["v"]
         # rank 15 -> bucket (2,4], frac=(15-10)/10=0.5
         # log interp: 2^(1 + (2-1)*0.5) = 2^1.5
         assert got == pytest.approx(2 ** 1.5)
-        lin = df.select(hist_quantile(0.5, F.col("hist")).alias("v")).first()["v"]
+        lin = df.select(hist_quantile(0.5, "hist.les", "hist.values")
+                        .alias("v")).first()["v"]
         assert lin == pytest.approx(3.0)
 
     def test_engine_exp_metric(self, spark):
@@ -248,10 +250,11 @@ class TestMinMaxConstrainedQuantile:
 
     def _q(self, spark, values, q, with_hints):
         df = hist_df(spark, [("a", self.LES, values)])
-        kw = dict(min_hint=F.lit(self.MINV),
-                  max_hint=F.lit(self.MAXV)) if with_hints else {}
+        kw = dict(min_hint=self.MINV,
+                  max_hint=self.MAXV) if with_hints else {}
         return df.select(
-            hist_quantile(q, F.col("hist"), **kw).alias("v")).first()["v"]
+            hist_quantile(q, "hist.les", "hist.values", **kw)
+            .alias("v")).first()["v"]
 
     @pytest.mark.parametrize("q", [0.95, 0.99, 0.995, 0.999])
     def test_max_constrains_top_bucket(self, spark, q):
